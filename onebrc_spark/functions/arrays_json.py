@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.schemas import EVENT_PROPS
 from onebrc_spark.sources.catalog import load_table
@@ -195,8 +196,7 @@ def fn_date_scaffold(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact integer cents before the sum (registry quantization rule)
             (
                 F.coalesce(
-                    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                    F.sum(F.round(F.col("o_totalprice") * 100).cast("long")),
+                    F.sum(round_long("o_totalprice * 100")),
                     F.lit(0),
                 )
                 / F.lit(100.0)
@@ -290,8 +290,7 @@ def fn_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         F.col("mk") == "v",
-                        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                        F.round(F.col("mv") / 2.0 * 100).cast("long"),
+                        round_long("mv / 2.0D * 100"),
                     )
                 )
                 / F.lit(100.0)

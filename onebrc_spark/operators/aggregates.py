@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -41,10 +42,11 @@ def onebrc_aggregate(df: DataFrame, key: str, value: str) -> DataFrame:
     sum's last ulp lands, and at sf0.1 two stations' means sit EXACTLY on a
     .x5 boundary, making the float formulation a per-run coin flip. The
     plan is unchanged: same partial→final hash aggregate, the sum is just
-    a long instead of a double.
+    a long instead of a double. Cents are `round_long` of `value * 100`:
+    Spark's `round` bit for bit, in double arithmetic instead of a
+    per-row BigDecimal (see `onebrc_spark.functions.round_long`).
     """
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    cents = F.round(F.col(value) * 100).cast("long")
+    cents = round_long(f"{value} * 100")
     s, n = F.col("_s"), F.col("_n")
     tenths = F.floor((2 * F.abs(s) + 10 * n) / (20 * n))
     mean = (F.when(s >= 0, tenths).otherwise(-tenths) / 10.0 + 0.0).alias("mean")
@@ -194,8 +196,7 @@ def agg_sum_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits depend on partition merge order (registry rule; the
     ml_temperature_mix ±1 flip was this class)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    price_cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    price_cents = round_long("l_extendedprice * 100")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -251,10 +252,9 @@ def agg_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~7e7 rows per group at max values; past that widen the SUM to
     DECIMAL(38,0) on both engines (same plan shape)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    pc = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dc = F.round(F.col("l_discount") * 100).cast("long")
-    tc = F.round(F.col("l_tax") * 100).cast("long")
+    pc = round_long("l_extendedprice * 100")
+    dc = round_long("l_discount * 100")
+    tc = round_long("l_tax * 100")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -400,8 +400,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.cube("l_returnflag", "l_linestatus")
         # unrounded exact-integer quotient (see agg_tpch_q1's avg note)
         .agg((
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(round_long("l_extendedprice * 100"))
             / F.count(F.lit(1))
             / F.lit(100.0)
         ).alias("avg_price"))
@@ -466,8 +465,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines for identical sorted input (sanctioned exception,
     registry rules)."""
     ev = load_table(spark, sf_dir, "events")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    qv = F.round(F.col("value") * 100).cast("long")
+    qv = round_long("value * 100")
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(qv).alias("s1"),
@@ -648,11 +646,10 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     covar(points, points)/1e4, slope(cents per unit)/1e2; corr is
     scale-invariant so the quantization cancels exactly."""
     li = load_table(spark, sf_dir, "lineitem")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    x = F.round(F.col("l_quantity")).cast("long")
-    y = F.round(F.col("l_extendedprice") * 100).cast("long")
-    d = F.round(F.col("l_discount") * 100).cast("long")
-    t = F.round(F.col("l_tax") * 100).cast("long")
+    x = round_long("l_quantity")
+    y = round_long("l_extendedprice * 100")
+    d = round_long("l_discount * 100")
+    t = round_long("l_tax * 100")
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -713,8 +710,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin_lo")
         # unrounded exact-integer quotient (see agg_tpch_q1's avg note)
         .agg(F.count(F.lit(1)).alias("n"), (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("value") * 100).cast("long"))
+                F.sum(round_long("value * 100"))
                 / F.count(F.lit(1))
                 / F.lit(100.0)
             ).alias("bin_avg"))
@@ -761,8 +757,7 @@ def agg_partial_reaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.to_date("ts").alias("day")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_vc"),
+        F.sum(round_long("value * 100")).alias("sum_vc"),
         F.min("value").alias("min_v"),
         F.max("value").alias("max_v"),
     )
@@ -894,8 +889,7 @@ def agg_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # quantities canonicalize as exact CENTS: cast('long') truncates in
         # Spark while DuckDB CAST(AS BIGINT) rounds — round(*100) is the
         # one definition both engines (and storage_compaction) share
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.round(F.col("l_quantity") * 100).cast("long"),
+        round_long("l_quantity * 100"),
         F.col("l_returnflag"),
     )
     return li.agg(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -112,8 +113,7 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("price") * 100).cast("long"))
+                F.sum(round_long("price * 100"))
                 / F.lit(100.0)
             ).alias("sum_price"),
         )
@@ -182,8 +182,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_keys"),
             (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("price") * 100).cast("long"))
+                F.sum(round_long("price * 100"))
                 / F.lit(100.0)
             ).alias("sum_price"),
         )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -307,8 +308,7 @@ def ml_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is a narrow projection + filter — the text never shuffles."""
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    weight = F.round(F.sqrt(F.col("n_total").cast("double")) * 1000).cast("long")
+    weight = round_long("sqrt(CAST(n_total AS DOUBLE)) * 1000")
     z = counts.agg(
         F.sum(weight).alias("denom_i"),
         F.sum("n_total").cast("long").alias("total"),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -529,8 +530,7 @@ def dq_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension surface for the curation pipeline."""
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_long("o_totalprice * 100").alias("cents"),
         (F.month("o_orderdate") % 2).cast("long").alias("snap"),
     )
     bounds = base.agg(F.min("cents").alias("mn"), F.max("cents").alias("mx"))

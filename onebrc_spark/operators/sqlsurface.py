@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import register_views
 
@@ -142,8 +143,7 @@ def pivot_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from onebrc_spark.sources.catalog import load_table
 
     o = load_table(spark, sf_dir, "orders")
-    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-    pc = F.round(F.col("o_totalprice") * 100).cast("long")
+    pc = round_long("o_totalprice * 100")
     pv = (
         o.withColumn("pc", pc)
         .groupBy("o_orderpriority")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onebrc_spark import schemas
+from onebrc_spark.functions import round_long
 from onebrc_spark.registry import query
 from onebrc_spark.sources.catalog import load_table
 
@@ -90,9 +91,8 @@ def storage_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("l_quantity").alias("sum_qty"),
             (
                 F.sum(
-                    # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                    F.round(F.col("l_extendedprice") * 100).cast("long")
-                    * (100 - F.round(F.col("l_discount") * 100).cast("long"))
+                    round_long("l_extendedprice * 100")
+                    * (100 - round_long("l_discount * 100"))
                 )
                 / F.lit(10000.0)
             ).alias("revenue"),
@@ -142,8 +142,7 @@ def storage_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / F.lit(100.0)).alias("total_price"),
+            (F.sum(round_long("o_totalprice * 100")) / F.lit(100.0)).alias("total_price"),
         )
         .orderBy("c_mktsegment")
     )
@@ -174,8 +173,7 @@ def storage_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("p_retailprice") * 100).cast("long")) / F.lit(100.0)).alias("total_retail"),
+            (F.sum(round_long("p_retailprice * 100")) / F.lit(100.0)).alias("total_retail"),
         )
         .orderBy("p_brand")
     )
@@ -204,8 +202,7 @@ def storage_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias("total_value"),
+            (F.sum(round_long("value * 100")) / F.lit(100.0)).alias("total_value"),
         )
         .orderBy("event_type")
     )
@@ -238,8 +235,7 @@ def storage_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("c_acctbal") * 100).cast("long")) / F.lit(100.0)).alias("total_bal"),
+            (F.sum(round_long("c_acctbal * 100")) / F.lit(100.0)).alias("total_bal"),
         )
         .orderBy("c_mktsegment")
     )
@@ -324,8 +320,7 @@ def storage_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("pk").alias("pk_hi"),
             F.min("sk").alias("sk_lo"),
             F.max("sk").alias("sk_hi"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            (F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / F.lit(100.0)).alias("sum_price"),
+            (F.sum(round_long("l_extendedprice * 100")) / F.lit(100.0)).alias("sum_price"),
         )
         .orderBy("z_bucket")
     )
@@ -378,8 +373,7 @@ def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             # unrounded: cents/100 has at most 2 decimals, so the round was
             # dead code — dropped so the banned shape can't be copy-pasted
             (
-                # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0
+                F.sum(round_long("o_totalprice * 100")) / 100.0
             ).alias("total_price"),
         )
         .orderBy("priority")
@@ -446,8 +440,7 @@ def storage_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_hash = row_fingerprint(
             F.col("l_orderkey"),
             F.col("l_linenumber"),
-            # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-            F.round(F.col("l_quantity") * 100).cast("long"),
+            round_long("l_quantity * 100"),
             F.col("l_returnflag"),
         )
         return df.agg(

@@ -33,7 +33,10 @@ Registration rules (SURVEY §7.4 definition-of-done):
     sum(CAST(round(x*100) AS BIGINT))/count/100.0 is bit-identical across
     engines at any scale (this fixed three sf0.1 divergences that were
     invisible at sf0.01; the flagship mean uses the integer-arithmetic
-    half-away-from-zero form for the same reason);
+    half-away-from-zero form for the same reason). Column-API code spells
+    the per-row quantizer `functions.round_long("x * 100")` — exactly
+    CAST(round(x) AS BIGINT) without the per-row BigDecimal; its docstring
+    carries the exactness argument;
   - more generally: NEVER let a DOUBLE SUM/AVG over many rows reach the
     result or a comparison — a parallel float sum's low bits depend on
     partition merge order (round-4 audit: a sqrt-weight normalizer flipped
@@ -84,7 +87,7 @@ Registration rules (SURVEY §7.4 definition-of-done):
     decimal shortest-repr view and the binary value COINCIDE at ties, and
     Spark's BigDecimal HALF_UP and DuckDB's C round() both take exact
     halves away from zero — this covers the whole cents-quantization idiom
-    round(x·100)::long regardless of grid; (b) GRID-IDENTITY — the input
+    round(x·100)::long regardless of grid (Spark side: round_long); (b) GRID-IDENTITY — the input
     sits on a decimal grid at least as coarse as 10^-d with ≥half-grid
     margin to any (d+1)-digit tie (2-dp prices under round(·,2); integer
     sums; percentile midpoints on the 5e-3 grid under round(·,4)), so the

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onebrc_spark.functions import round_long
 from onebrc_spark.schemas import MEASUREMENTS
 
 
@@ -47,13 +48,16 @@ def read_measurements_fast(spark: SparkSession, path: str) -> DataFrame:
     lines and splits once — measured 18 → 25 M rows/s on 50M rows. It is
     the semantic twin of the reference's no-validation byte scanners
     (`thebracket.rs:80-107`, `rangnargrootkeorkamp.rs:137-181`): malformed
-    lines yield NULL measure instead of an error, so use read_measurements
-    (FAILFAST) when the input is untrusted. Everything stays in whole-stage
-    codegen — substring_index + cast are JVM expressions on the scan.
+    lines yield NULL measure instead of an error (`try_cast`: a plain cast
+    raises CAST_INVALID_INPUT under Spark 4's ANSI default), so use
+    read_measurements (FAILFAST) when the input must be rejected. A line
+    without ';' keeps the whole line as its station. Everything stays in
+    whole-stage codegen — substring_index + try_cast are JVM expressions on
+    the scan.
     """
     return spark.read.text(path).select(
         F.substring_index("value", ";", 1).alias("station"),
-        F.substring_index("value", ";", -1).cast("double").alias("measure"),
+        F.substring_index("value", ";", -1).try_cast("double").alias("measure"),
     )
 
 
@@ -153,30 +157,25 @@ def onebrc_scan_agg_arrow(spark: SparkSession, path: str) -> DataFrame:
         for batch in batches:
             for row in batch.to_pylist():
                 f, start, end = row["file"], row["start"], row["end"]
-                size = _os.path.getsize(f)
+                # A chunk owns the lines whose first byte lies in
+                # (start, end] (plus byte 0 for the first chunk), read
+                # whole however long they are.
                 with open(f, "rb") as fh:
                     fh.seek(start)
-                    # pad past `end` so the line straddling the boundary is
-                    # completed here (it STARTS before end, so it is ours);
-                    # 1 KiB is far beyond any `station;temp` line
-                    raw = fh.read((end - start) + (1024 if end < size else 0))
-                begin = 0
-                if start > 0:
-                    # the line crossing `start` belongs to the previous
-                    # chunk: skip to the first newline (reference snap,
-                    # main.rs:79-122)
-                    begin = raw.find(b"\n") + 1
-                cut = len(raw)
-                if end < size:
-                    # cut after the first newline AT OR PAST file byte `end`
-                    # (search from end-start, NOT end-start-1: when byte
-                    # end-1 is itself a newline, searching one early would
-                    # cut here at `end` while the next chunk skips through
-                    # its first newline — the line starting exactly at
-                    # `end` would be dropped by both chunks)
-                    nl = raw.find(b"\n", end - start)
-                    cut = len(raw) if nl < 0 else nl + 1
-                buf = raw[begin:cut]
+                    if start > 0:
+                        # the line crossing `start` belongs to the previous
+                        # chunk: skip through the first newline at or past
+                        # `start` (reference snap, main.rs:79-122)
+                        fh.readline()
+                    begin = fh.tell()
+                    if begin > end:
+                        # that line runs past `end`: no line starts here
+                        continue
+                    # finish the line straddling `end` by reading through
+                    # the first newline AT OR PAST byte `end` — the same
+                    # newline the next chunk skips through, so a line
+                    # starting exactly at `end` is ours and not dropped
+                    buf = fh.read(end - begin) + fh.readline()
                 if not buf:
                     continue
                 tbl = pacsv.read_csv(
@@ -361,8 +360,7 @@ def onebrc_permissive_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection + single aggregation, no shuffle beyond the 4-group merge."""
     s = load_table(spark, sf_dir, "supplier")
     cents_str = (
-        # grid-safe int-round (rulebook r13a): .5 ties are exact dyadics; both engines round half away
-        F.round(F.col("s_acctbal") * 100).cast("bigint").cast("string")
+        round_long("s_acctbal * 100").cast("string")
     )
     line = (
         F.when(F.col("s_suppkey") % 7 == 0, F.concat(F.col("s_name"), cents_str))

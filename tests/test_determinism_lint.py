@@ -177,3 +177,62 @@ def test_no_round_on_cosine_or_tie_reachable_outputs():
     # helper and 'simplifying' back to round in one sweep)
     assert sim.count("cos_round6(") >= 9, "cos_round6 call sites vanished"
     assert sim.count("_cos6_sql(") >= 9, "_cos6_sql oracle sites vanished"
+
+
+# Cents (and the mlprep 1e-3 weight) have one spelling:
+# onebrc_spark.functions.round_long, which is CAST(round(x) AS BIGINT) bit
+# for bit without the per-row BigDecimal (tests/test_round_long.py). A site
+# whose query exists to exercise Spark's own `round` may keep it by carrying
+# this marker on the call's line or the line above it.
+_KEEP_ROUND = "lint: keeps-round"
+
+
+def _cents_round_casts(text: str) -> list[int]:
+    """Offsets of every Column-API `F.round(<x> * 100).cast(` (or `* 1000`)
+    in `text`. Parentheses are balanced, so multi-line operands match."""
+    hits = []
+    for m in re.finditer(r"F\.round\(", text):
+        i, depth = m.end(), 1
+        while depth and i < len(text):
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        operand = text[m.end() : i - 1]
+        if re.search(r"\*\s*1000?\s*$", operand) and re.match(r"\s*\.cast\(", text[i:]):
+            hits.append(m.start())
+    return hits
+
+
+def test_cents_use_round_long():
+    violations = []
+    calls = 0
+    for path in sorted(SRC.rglob("*.py")):
+        raw_lines = path.read_text().splitlines()
+        text = _scan_text(path)
+        calls += len(re.findall(r"(?<![\w.])(?<!def )round_long\(", text))
+        for pos in _cents_round_casts(text):
+            lineno = text[:pos].count("\n") + 1
+            near = raw_lines[max(0, lineno - 2) : lineno]
+            if any(_KEEP_ROUND in line for line in near):
+                continue
+            violations.append(
+                f"{path.relative_to(SRC.parent)}:{lineno}: "
+                f"{raw_lines[lineno - 1].strip()[:100]}"
+            )
+    assert not violations, (
+        "F.round(x * 100).cast(...) pays a BigDecimal per row — use "
+        'onebrc_spark.functions.round_long("x * 100"), which is '
+        f"bit-identical, or mark a site that exercises round itself with "
+        f"'# {_KEEP_ROUND}':\n" + "\n".join(violations)
+    )
+    # the quantizer itself must stay in use (guards against deleting the
+    # helper and sweeping back to F.round in one change)
+    assert calls >= 45, f"round_long call sites dropped to {calls}"
+
+
+def test_cents_lint_catches_the_shapes():
+    assert _cents_round_casts('F.round(F.col("value") * 100).cast("long")')
+    assert _cents_round_casts("F.round(\n    F.sqrt(F.col('n')) * 1000\n).cast('bigint')")
+    assert _cents_round_casts('x = F.round(F.col("p") / 2.0 * 100).cast("long")')
+    # a rounding to d places, or an uncast round, is not the cents idiom
+    assert not _cents_round_casts('F.round(F.col("l_tax") * 100, 2).cast("double")')
+    assert not _cents_round_casts('F.round(F.col("x") * 100)')

@@ -62,6 +62,32 @@ def test_failfast_on_malformed(spark, tmp_path):
         df.collect()
 
 
+def test_fast_reader_nulls_malformed_measure(spark, tmp_path):
+    """read_measurements_fast's contract: a malformed line yields a NULL
+    measure instead of raising (a plain cast raises CAST_INVALID_INPUT
+    under ANSI), and the flagship's count(value) skips that row."""
+    from onebrc_spark.sources.onebrc import read_measurements_fast
+
+    bad = tmp_path / "bad.txt"
+    bad.write_text("Hamburg;12.0\nno-separator-here\nHamburg;13.0\nHamburg;oops\n")
+    df = read_measurements_fast(spark, str(bad))
+    assert sorted(df.collect(), key=str) == sorted(
+        [
+            ("Hamburg", 12.0),
+            ("no-separator-here", None),
+            ("Hamburg", 13.0),
+            ("Hamburg", None),
+        ],
+        key=str,
+    )
+    rows = onebrc_aggregate(df, "station", "measure").collect()
+    # 25.0 / 2 rows, not / 3: the NULL measure is not counted
+    assert rows == [
+        ("Hamburg", 12.0, 12.5, 13.0),
+        ("no-separator-here", None, None, None),
+    ]
+
+
 def test_generator_shape_and_invariants(spark):
     df = generate_measurements(spark, 50_000, seed=7)
     agg = onebrc_aggregate(df, "station", "measure")
@@ -136,6 +162,41 @@ def test_arrow_scan_boundary_newline_not_dropped(spark, tmp_path):
     finally:
         ob._ARROW_SCAN_CHUNK = prev
     assert rows == [("AB", 1.0, 2.0, 3.0)]
+
+
+def test_arrow_scan_long_line_across_boundary(spark, tmp_path):
+    """A line longer than any fixed read-ahead (2 KiB here) that straddles
+    a chunk boundary is read whole by the chunk it starts in and skipped
+    by the next one, so the Arrow scan agrees with the JVM path however
+    the boundaries fall."""
+    import onebrc_spark.sources.onebrc as ob
+
+    long_station = "L" * 2048
+    head = "".join("AB;1.0\n" if i % 2 == 0 else "AB;3.0\n" for i in range(100))
+    tail = "".join("CD;-2.5\n" for _ in range(100))
+    # 700 bytes of short lines, then the 2 KiB line, then short lines
+    p = tmp_path / "long_line.txt"
+    p.write_text(head + f"{long_station};7.5\n" + tail, encoding="utf-8")
+    assert p.stat().st_size == 700 + 2053 + 800
+
+    jvm = onebrc_aggregate(
+        ob.read_measurements_fast(spark, str(p)), "station", "measure"
+    ).collect()
+    prev = ob._ARROW_SCAN_CHUNK
+    ob._ARROW_SCAN_CHUNK = 1_400  # n=2, step=1777: the boundary cuts the line
+    try:
+        rows = ob.onebrc_scan_agg_arrow(spark, str(p)).collect()
+        ob._ARROW_SCAN_CHUNK = 700  # n=5, step=711: two chunks lie inside it
+        rows_fine = ob.onebrc_scan_agg_arrow(spark, str(p)).collect()
+    finally:
+        ob._ARROW_SCAN_CHUNK = prev
+    assert rows == jvm
+    assert rows_fine == jvm
+    assert rows == [
+        ("AB", 1.0, 2.0, 3.0),
+        ("CD", -2.5, -2.5, -2.5),
+        (long_station, 7.5, 7.5, 7.5),
+    ]
 
 
 def test_arrow_scan_empty_input(spark, tmp_path):
